@@ -68,11 +68,6 @@ class SnapshotBloom:
     false negatives, same as before.  The ``hash`` column is NOT NULL
     (0 on bitmap rows) so pandas keeps exact int64 — a nullable long
     would decay to float64 and corrupt hashes above 2^53.
-
-    This is the engine's ONLY bloom variant: a legacy file-based
-    ShardedBloom (shared-POSIX-filesystem bitmaps) was retired to
-    tests/legacy_bloom.py in round 6 — it shares the bit math
-    (``_bit_positions``) and false-positive-only semantics.
     """
 
     def __init__(self, spark, path: str | Path, n_shards: int = 64,

@@ -46,9 +46,7 @@ def main() -> None:
     pages.count()
     seeds = spark.read.schema(schemas.SEEDS).parquet(data + "/seeds")
     root = tempfile.mkdtemp(prefix="probe_", dir="/dev/shm")
-    native = os.getenv("SPARK_GRAFT_NATIVE_WRITE", "1") == "1"
-    eng = CrawlEngine(spark, root, pages, window_sec=100000.0,
-                      native_write=native)
+    eng = CrawlEngine(spark, root, pages, window_sec=100000.0)
     t0 = time.perf_counter()
     eng.seed(seeds)
     print(f"SEED {time.perf_counter()-t0:.1f}s", flush=True)
