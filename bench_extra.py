@@ -52,12 +52,14 @@ def decompose(spark, sf_dir):
     """Stage-by-stage timings for the two heavy headline queries."""
     from pyspark.sql import functions as F
 
+    from board_game_scraper_spark.operators.dedup import (
+        shingles_col as _shingles,
+        tokens_col as _toks,
+    )
     from board_game_scraper_spark.queries import (
         _docs_with_near_dups,
         _h60,
-        _shingles,
         _t,
-        _toks,
     )
 
     docs_nd = _docs_with_near_dups(spark, sf_dir)

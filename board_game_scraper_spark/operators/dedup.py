@@ -14,23 +14,30 @@ HOF lambdas re-evaluate their body per element and CollapseProject
 inlines a non-cheap expression referenced once syntactically into the
 lambda — the old inline formulation re-ran the regex split 3x per
 shingle and the whole shingle build once per MinHash permutation
-(measured 24x on the md5 oracle twin of minhash_band).  Signatures are
-likewise computed in ONE pass over the shingles (per shingle all salted
-hashes at once, folded with an elementwise running min — min commutes
-with the fold, so the result equals the per-perm array_min exactly).
+(measured 24x on minhash_band).  Signatures are likewise computed in
+ONE pass over the shingles (per shingle all salted hashes at once,
+folded with an elementwise running min — min commutes with the fold,
+so the result equals the per-perm array_min exactly).
+
+Hash argument: every hashing operator takes its hash as a function
+(xxhash64 by default).  The oracle-checked queries (queries.py) call
+these same operators with md5-derived hashes, which DuckDB reproduces
+bit-exactly — so the oracle gate runs the production code.
 
 Operators:
 - exact_dedup            md5 hash groupBy (exact duplicates)
 - simhash                64-bit SimHash from token hashes (Charikar)
-- minhash_signatures     K-permutation MinHash via xxhash64(salt+shingle)
+- minhash_signatures     K-permutation MinHash via salted shingle hashes
 - lsh_bands              banding of the signature for bucket join
 - near_dup_pairs         candidate pairs from shared bands + verified
                          n-gram Jaccard similarity
+- bucket_pairs           ordered in-bucket id pairs (shared by the LSH
+                         near-dup operators here and in similarity.py)
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _MAX_LONG = (1 << 63) - 1
@@ -61,7 +68,8 @@ def shingles_col(text_col, k: int = 3):
 def shingles_from_toks(toks_name: str = "_toks", k: int = 3):
     """k-word shingles from a MATERIALIZED token-array column.  The
     multiple syntactic references to the column keep CollapseProject
-    from substituting the split back into the lambda."""
+    from substituting the split back into the lambda (it refuses to
+    duplicate non-cheap expressions, SPARK-36718)."""
     tk = F.col(toks_name)
     idx = F.sequence(F.lit(1), F.greatest(F.size(tk) - (k - 1), F.lit(1)))
     return F.transform(
@@ -84,16 +92,17 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str,
-            bits: int = 64) -> DataFrame:
+            bits: int = 64, hash=F.xxhash64) -> DataFrame:
     """SimHash: sign-aggregate of per-token hash bits.
 
-    Pure built-ins: per token t, xxhash64(t) contributes +1/-1 per bit;
-    the fingerprint bit b is 1 iff the sum over tokens is >= 0.  One
-    xxhash64 per distinct token (bound once via a 1-element transform
-    input — HOF inputs are evaluated once, lambda bodies per element),
-    its ``bits`` ±1 contributions unrolled into an array, and a single
-    aggregate() keeps the running sums elementwise — same sums in the
-    same order as the per-bit formulation, so identical fingerprints.
+    Pure built-ins: per token t, hash(t) (a long column expression)
+    contributes +1/-1 per bit; the fingerprint bit b is 1 iff the sum
+    over tokens is >= 0.  One hash per distinct token (bound once via a
+    1-element transform input — HOF inputs are evaluated once, lambda
+    bodies per element), its ``bits`` ±1 contributions unrolled into an
+    array, and a single aggregate() keeps the running sums elementwise —
+    same sums in the same order as the per-bit formulation, so identical
+    fingerprints.
     """
     tdf = df.select(
         F.col(id_col),
@@ -103,7 +112,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
     def contrib(t):
         return F.element_at(
             F.transform(
-                F.array(F.xxhash64(t)),
+                F.array(hash(t)),
                 lambda h: F.array(
                     *[
                         F.shiftright(h, b).bitwiseAND(F.lit(1)).cast("int")
@@ -133,7 +142,23 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
     return sdf.select(F.col(id_col), fingerprint.alias("simhash"))
 
 
-def _minhash_fold(num_perm: int):
+def xxhash_salted(p: int, s):
+    """Permutation p's hash of shingle s: xxhash64(str(p), s)."""
+    return F.xxhash64(F.lit(str(p)), s)
+
+
+def _shingle_frame(df: DataFrame, id_col: str, text_col: str,
+                   shingle_k: int) -> DataFrame:
+    """(id, sh): k-word shingles built from materialized tokens."""
+    tdf = df.select(
+        F.col(id_col), tokens_col(F.col(text_col)).alias("_toks")
+    )
+    return tdf.select(
+        F.col(id_col), shingles_from_toks(k=shingle_k).alias("sh")
+    )
+
+
+def _minhash_fold(num_perm: int, salted):
     """MinHash signature from a materialized ``sh`` shingle column in
     one pass: per shingle all num_perm salted hashes, elementwise
     running min (shingle arrays are never empty — split('') yields ['']
@@ -143,34 +168,26 @@ def _minhash_fold(num_perm: int):
         F.array_repeat(F.lit(_MAX_LONG).cast("long"), num_perm),
         lambda acc, s: F.zip_with(
             acc,
-            F.array(
-                *[
-                    F.xxhash64(F.lit(str(p)), s)
-                    for p in range(num_perm)
-                ]
-            ),
+            F.array(*[salted(p, s) for p in range(num_perm)]),
             lambda a, b: F.least(a, b),
         ),
     )
 
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       num_perm: int = 16, shingle_k: int = 3) -> DataFrame:
-    """MinHash signature: min over shingles of xxhash64(perm_salt, shingle)
+                       num_perm: int = 16, shingle_k: int = 3,
+                       salted=xxhash_salted) -> DataFrame:
+    """MinHash signature: min over shingles of salted(perm, shingle)
     for each of num_perm salted hash functions — all JVM-side."""
-    tdf = df.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("_toks")
-    )
-    sh = tdf.select(
-        F.col(id_col), shingles_from_toks(k=shingle_k).alias("sh")
-    )
+    sh = _shingle_frame(df, id_col, text_col, shingle_k)
     return sh.select(
-        F.col(id_col), _minhash_fold(num_perm).alias("signature")
+        F.col(id_col), _minhash_fold(num_perm, salted).alias("signature")
     )
 
 
 def lsh_bands(signatures: DataFrame, id_col: str,
-              bands: int = 4, rows_per_band: int = 4) -> DataFrame:
+              bands: int = 4, rows_per_band: int = 4,
+              band_hash=F.xxhash64) -> DataFrame:
     """Band the signature: (id, band, band_key).  Docs sharing a
     (band, band_key) are near-dup candidates — found by equi-join, the
     only approach that survives 10^10 docs."""
@@ -179,7 +196,7 @@ def lsh_bands(signatures: DataFrame, id_col: str,
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
+                lambda b: band_hash(
                     F.concat_ws(
                         ":",
                         F.slice(
@@ -202,6 +219,32 @@ def ngram_jaccard(a_shingles, b_shingles):
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
+def bucket_pairs(members: DataFrame, keys: list[str], id_col: str,
+                 a: str = "a", b: str = "b") -> DataFrame:
+    """Distinct ordered pairs (a < b) of ids that share a bucket.
+
+    GROUPS on ``keys`` instead of self-joining the members: a self-join
+    computes the whole bucketing pipeline twice (broadcast build side +
+    stream side, no exchange reuse).  One shuffle of (keys, id), sorted
+    bucket members, in-bucket pairs via posexplode — per-row memory
+    stays O(bucket) and the pair set equals the join's."""
+    buckets = members.groupBy(*keys).agg(
+        F.array_sort(F.collect_list(id_col)).alias("_ids")
+    )
+    return (
+        buckets.where(F.size("_ids") >= 2)
+        .select("_ids", F.posexplode("_ids").alias("_i", a))
+        .select(
+            a,
+            F.explode(
+                F.slice(F.col("_ids"), F.col("_i") + 2, F.size("_ids"))
+            ).alias(b),
+        )
+        .where(F.col(a) < F.col(b))
+        .distinct()
+    )
+
+
 def near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -210,42 +253,25 @@ def near_dup_pairs(
     num_perm: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
+    salted=xxhash_salted,
+    band_hash=F.xxhash64,
 ) -> DataFrame:
     """Near-duplicate pairs: LSH candidate generation + exact verify.
 
-    1. signatures → bands → GROUP on (band, band_key) and expand
-       ordered in-bucket pairs (a self-join would compute the whole
-       signature pipeline twice — broadcast build side + stream side;
-       grouping shuffles only (band, band_key, id) once and the per-row
-       memory stays O(bucket) via posexplode).  Dedup to one row per
-       (a, b) pair.
+    1. signatures → bands → ``bucket_pairs`` → one row per (a, b).
     2. verify with exact shingle Jaccard; keep >= threshold.
     The verify join re-attaches shingles by id — two broadcast-able or
     shuffle-hash joins, no cross product anywhere.
     """
-    sigs = minhash_signatures(df, id_col, text_col, num_perm, shingle_k)
-    banded = lsh_bands(sigs, id_col, bands, num_perm // bands)
-    buckets = banded.groupBy("band", "band_key").agg(
-        F.array_sort(F.collect_list(id_col)).alias("ids")
+    sh = _shingle_frame(df, id_col, text_col, shingle_k)
+    sigs = sh.select(
+        F.col(id_col), _minhash_fold(num_perm, salted).alias("signature")
     )
-    cand = (
-        buckets.where(F.size("ids") >= 2)
-        .select("ids", F.posexplode("ids").alias("i", "a"))
-        .select(
-            "a",
-            F.explode(
-                F.slice(F.col("ids"), F.col("i") + 2, F.size("ids"))
-            ).alias("b"),
-        )
-        .where(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    tdf = df.select(
-        F.col(id_col), tokens_col(F.col(text_col)).alias("_toks")
-    )
-    sh = tdf.select(
-        F.col(id_col), shingles_from_toks(k=shingle_k).alias("sh")
-    )
+    banded = lsh_bands(sigs, id_col, bands, num_perm // bands, band_hash)
+    # buckets are keyed by band_key alone, as the oracle SQL joins: a
+    # pair beyond the (band, band_key) buckets needs a cross-band hash
+    # collision, and every candidate is still verified exactly
+    cand = bucket_pairs(banded, ["band_key"], id_col)
     verified = (
         cand.join(sh.select(F.col(id_col).alias("a"),
                             F.col("sh").alias("sh_a")), "a")

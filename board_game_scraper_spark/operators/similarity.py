@@ -20,8 +20,10 @@ trained centroids (or use LSH hyperplane bucketing, also provided).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .dedup import bucket_pairs
 
 
 def dot(a, b):
@@ -76,40 +78,13 @@ def _hyperplane_weight(p, d, seed):
     ) / 1000000.0
 
 
-def hyperplane_buckets(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
-) -> DataFrame:
-    """LSH bucketing by random-hyperplane signs.
-
-    Hyperplanes are pseudo-random but deterministic: plane p, dim d has
-    weight hash(p,d) mapped to [-1,1].  The weights depend only on
-    (p, d, seed) — they are CONSTANTS — but Catalyst does not
-    constant-fold through HOF lambdas, so the old per-row formulation
-    re-ran n_planes*dim xxhash64 calls per vector (512/row for 8x64).
-    They are now evaluated once on a 1-row driver-side job (the same
-    xxhash64 expressions → identical doubles) and inlined as literal
-    arrays; the per-row work is just the n_planes dot products.
-
-    ``dim`` (vector width) is probed from the first row when not given —
-    vectors are assumed to share one width (true for every embedding
-    table in this repo; rows with FEWER dims still get the same weight
-    prefix via slice).
-    """
-    spark = vectors.sparkSession
-    if dim is None:
-        head = vectors.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(head["d"]) if head is not None else 0
-    if dim <= 0:
-        # empty input: bucket column is never evaluated; keep the plan
-        # well-typed with a zero bucket
-        return vectors.select(F.col(id_col), F.col(vec_col),
-                              F.lit(0).cast("long").alias("bucket"))
-    wrow = spark.range(1).select(
+def xxhash_planes(seed: int, n_planes: int, dim: int) -> list[list[float]]:
+    """Hyperplane weights: plane p, dim d gets xxhash64(p, d, seed)
+    mapped to [-1, 1].  The weights are CONSTANTS, but Catalyst does not
+    constant-fold through HOF lambdas — a per-row formulation re-ran
+    n_planes*dim xxhash64 calls per vector (512/row for 8x64) — so they
+    are evaluated once on a 1-row job and returned as Python floats."""
+    wrow = SparkSession.active().range(1).select(
         F.array(
             *[
                 F.array(*[_hyperplane_weight(p, d, seed)
@@ -118,7 +93,46 @@ def hyperplane_buckets(
             ]
         ).alias("w")
     ).first()
-    weights = [[float(v) for v in plane] for plane in wrow["w"]]
+    return [[float(v) for v in plane] for plane in wrow["w"]]
+
+
+def _table_planes(table: int, n_planes: int, dim: int) -> list[list[float]]:
+    """embedding_near_dup's LSH table t uses the planes of seed 1000 + t."""
+    return xxhash_planes(1000 + table, n_planes, dim)
+
+
+def hyperplane_buckets(
+    vectors: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_planes: int = 8,
+    seed: int = 42,
+    dim: int | None = None,
+    planes=xxhash_planes,
+) -> DataFrame:
+    """LSH bucketing by random-hyperplane signs.
+
+    ``planes(seed, n_planes, dim)`` returns the pseudo-random but
+    deterministic plane weights (xxhash64-derived by default; the oracle
+    query passes md5-derived ones); they are inlined as literal arrays,
+    so the per-row work is just the n_planes dot products.  Bucket bit p
+    is the sign of the 6-decimal-rounded plane dot, so float noise in
+    the last bits cannot flip it in one engine only.
+
+    ``dim`` (vector width) is probed from the first row when not given —
+    vectors are assumed to share one width (true for every embedding
+    table in this repo; rows with FEWER dims still get the same weight
+    prefix via slice).
+    """
+    if dim is None:
+        head = vectors.select(F.size(F.col(vec_col)).alias("d")).first()
+        dim = int(head["d"]) if head is not None else 0
+    if dim <= 0:
+        # empty input: bucket column is never evaluated; keep the plan
+        # well-typed with a zero bucket
+        return vectors.select(F.col(id_col), F.col(vec_col),
+                              F.lit(0).cast("long").alias("bucket"))
+    weights = planes(seed, n_planes, dim)
 
     vec = F.col(vec_col)
     bucket = None
@@ -126,7 +140,7 @@ def hyperplane_buckets(
         w = F.array(*[F.lit(v) for v in weights[p]])
         # rows may be narrower than ``dim``: trim the weight prefix so
         # zip_with never pads (a padded null would null the dot product)
-        pd_ = dot(vec, F.slice(w, 1, F.size(vec)))
+        pd_ = F.round(dot(vec, F.slice(w, 1, F.size(vec))), 6)
         term = F.when(pd_ >= 0, F.lit(1 << p).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -143,6 +157,7 @@ def embedding_near_dup(
     n_planes: int = 8,
     n_tables: int = 4,
     round_to: int | None = 4,
+    planes=_table_planes,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via multi-table
     hyperplane LSH (training-pipeline dedup op).
@@ -150,12 +165,11 @@ def embedding_near_dup(
     The only all-pairs-free shape that survives 10^10 vectors:
 
     1. each of ``n_tables`` independent hyperplane tables assigns every
-       vector an ``n_planes``-bit sign bucket (``hyperplane_buckets``,
-       seeded per table — weights are xxhash64-derived JVM-side, no
-       driver matrix);
-    2. candidate pairs = self-EQUI-join on (table, bucket) with
-       ``id_a < id_b`` (never a cartesian — the same banded-join shape
-       as MinHash-LSH in operators/dedup.py);
+       vector an ``n_planes``-bit sign bucket (``hyperplane_buckets``
+       with ``planes(t, n_planes, dim)`` for table t);
+    2. candidate pairs = ``bucket_pairs`` on (table, bucket) with
+       ``id_a < id_b`` (never a cartesian — the same banded shape as
+       MinHash-LSH in operators/dedup.py);
     3. exact cosine verify ``>= threshold`` over the candidates only.
 
     Recall is the standard LSH union over tables (1-(1-p^planes)^tables
@@ -169,30 +183,11 @@ def embedding_near_dup(
     sigs = None
     for t in range(n_tables):
         bt = hyperplane_buckets(
-            base, id_col, vec_col, n_planes=n_planes, seed=1000 + t,
-            dim=dim,
+            base, id_col, vec_col, n_planes=n_planes, seed=t, dim=dim,
+            planes=planes,
         ).select(id_col, F.lit(t).alias("t"), "bucket")
         sigs = bt if sigs is None else sigs.unionByName(bt)
-    # candidate pairs by GROUPING on (table, bucket) instead of a
-    # self-join: the join computed every table's bucketing twice
-    # (broadcast build + stream side); one shuffle of (t, bucket, id),
-    # ordered in-bucket pairs via posexplode (per-row memory O(bucket),
-    # pair count identical to the join's output)
-    buckets = sigs.groupBy("t", "bucket").agg(
-        F.array_sort(F.collect_list(id_col)).alias("ids")
-    )
-    cand = (
-        buckets.where(F.size("ids") >= 2)
-        .select("ids", F.posexplode("ids").alias("i", "_ida"))
-        .select(
-            "_ida",
-            F.explode(
-                F.slice(F.col("ids"), F.col("i") + 2, F.size("ids"))
-            ).alias("_idb"),
-        )
-        .where(F.col("_ida") < F.col("_idb"))
-        .distinct()
-    )
+    cand = bucket_pairs(sigs, ["t", "bucket"], id_col, "_ida", "_idb")
     va = base.select(F.col(id_col).alias("_ida"),
                      F.col(vec_col).alias("_va"))
     vb = base.select(F.col(id_col).alias("_idb"),

@@ -29,8 +29,9 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Pick the language whose stopword profile hits most tokens.
 
-    greatest(struct(score, lang)) keeps it one narrow projection; ties
-    break to the lexicographically smaller struct (deterministic).
+    greatest(struct(score, lang)) keeps it one narrow projection; a
+    score tie goes to the larger struct, i.e. the lexicographically
+    larger language code (deterministic: fr beats de, en beats de).
     Docs with zero hits get lang = NULL.
     """
     # materialize the split once, then the winning struct once — the

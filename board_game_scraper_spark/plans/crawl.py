@@ -28,9 +28,14 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..sources.fetch import fetch_from_table
 from ..tables import SnapshotTable
-from .frontier import RETRYABLE, retry_rows, schedule
+from .frontier import HOST_BUDGETS, RETRYABLE, retry_rows, schedule
 from .parse import run_parse_flat
 from .seen import SnapshotBloom, filter_unseen
+
+# fetch attempts per URL before a retryable status is given up
+MAX_ATTEMPTS = 3
+# schedule()'s phase-1 skew-guard salt buckets per host
+SALT_BUCKETS = 8
 
 
 def callback_kind_col(url_canon):
@@ -102,9 +107,6 @@ class CrawlEngine:
         root: str | Path,
         pages: DataFrame,
         window_sec: float = 60.0,
-        budgets: dict | None = None,
-        max_attempts: int = 3,
-        salt_buckets: int = 8,
         bloom_shards: int = 64,
         use_bloom: bool = True,
         record_schedule: bool = False,
@@ -119,9 +121,7 @@ class CrawlEngine:
         self.root = Path(root)
         self.pages = pages
         self.window_sec = window_sec
-        self.budgets = budgets
-        self.max_attempts = max_attempts
-        self.salt_buckets = salt_buckets
+        self.salt_buckets = SALT_BUCKETS  # read by perfbench/crawlwork.py
         # Snapshot writes per round are small at sandbox scale; 32-way
         # writes cost ~3s each in task-commit overhead.  On a cluster with
         # large rounds pass None (let AQE size the output).
@@ -342,15 +342,14 @@ class CrawlEngine:
         self.robots.append(rows, coalesce=1)
 
     def _current_budgets(self) -> dict | None:
-        """F4: politeness budgets from the adaptive host_state table."""
+        """F4: politeness budgets from the adaptive host_state table
+        (None: schedule() applies the static HOST_BUDGETS)."""
         if not self.adaptive_politeness:
-            return self.budgets
+            return None
         rows = self.host_state.read().collect()
         if not rows:
-            return self.budgets
-        from .frontier import HOST_BUDGETS
-
-        merged = dict(self.budgets or HOST_BUDGETS)
+            return None
+        merged = dict(HOST_BUDGETS)
         for r in rows:
             merged[r["host"]] = (float(r["delay_sec"]),
                                  int(r["concurrency"]))
@@ -740,7 +739,7 @@ class CrawlEngine:
             (
                 (F.col("item_kind") == "fetch")
                 & F.col("fetch.status").isin(list(RETRYABLE))
-                & (F.col("fetch.attempt") + 1 < F.lit(self.max_attempts))
+                & (F.col("fetch.attempt") + 1 < F.lit(MAX_ATTEMPTS))
             ).cast("long")
         ).alias("retryable")
         parsed.observe(
@@ -778,7 +777,7 @@ class CrawlEngine:
 
         if self._spec_pool is None:
             self._spec_pool = _TPE(max_workers=1)
-        frontier_expr = retry_rows(fetch_rows, round_no, self.max_attempts)
+        frontier_expr = retry_rows(fetch_rows, round_no, MAX_ATTEMPTS)
 
         def _run() -> dict:
             self.spark.sparkContext.setJobDescription(
@@ -921,7 +920,7 @@ class CrawlEngine:
         )
         obs_retry = Observation()
         retries = retry_rows(
-            fetch_rows, round_no, self.max_attempts
+            fetch_rows, round_no, MAX_ATTEMPTS
         ).observe(obs_retry, F.count(F.lit(1)).alias("n"),
                   F.min("not_before_round").alias("min_nb"))
 
@@ -1029,8 +1028,7 @@ class CrawlEngine:
             from .frontier import update_host_state
 
             prev_state = self.host_state.read()
-            updated = update_host_state(prev_state, fetch_rows, round_no,
-                                        self.budgets)
+            updated = update_host_state(prev_state, fetch_rows, round_no)
             merged = prev_state.join(
                 updated.select("host"), "host", "left_anti"
             ).unionByName(updated)
@@ -1266,7 +1264,7 @@ class CrawlEngine:
             # out-of-band inserts (requeue / seed-request folds)
             # invalidate it below.
             self._next_frontier = retry_rows(
-                fetch_rows, round_no, self.max_attempts
+                fetch_rows, round_no, MAX_ATTEMPTS
             )
         else:
             next_eligible = round_no + 1

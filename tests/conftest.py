@@ -9,11 +9,21 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from board_game_scraper_spark.session import get_spark  # noqa: E402
 
+# The benchmark's in-repo copy of the sf0.01 oracle tables (500 documents,
+# 500 embeddings; one row group per file).  Tests only read it.
+SF_DIR = str(Path(__file__).resolve().parent.parent
+             / "perfbench" / "data" / "sf0.01")
+
 
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture(scope="session")
+def sf_dir():
+    return SF_DIR
 
 
 @pytest.fixture(scope="session")

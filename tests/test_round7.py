@@ -127,14 +127,15 @@ def test_compact_resync_mid_crawl_converges(spark, tmp_path):
 
 # ------------------------------- scan spreading (_par) result identity
 
-def test_par_spreads_unsplittable_scan_and_keeps_results(spark, monkeypatch):
+def test_par_spreads_unsplittable_scan_and_keeps_results(spark, sf_dir,
+                                                          monkeypatch):
     """Round-7 _par (guide §2.5 one-huge-unsplittable-file): single-file
     single-row-group scans are hash-spread to the session's parallelism,
     results bit-identical with and without, and _par is the identity when
     the input already has enough partitions (no shuffle added at scale)."""
     import board_game_scraper_spark.queries as q
 
-    sf = "/root/testdata/sf0.001"
+    sf = sf_dir
     docs = q._t(spark, sf, "documents")
     n = spark.sparkContext.defaultParallelism
     assert docs.rdd.getNumPartitions() < n  # the premise: unsplittable

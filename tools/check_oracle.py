@@ -5,6 +5,8 @@ DuckDB at the given sf dir, compares row count, sorted-column schema, and
 an order-insensitive value hash.  Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
+
+sf_dir defaults to the in-repo perfbench/data/sf0.01.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
+REPO_SF = Path(__file__).resolve().parent.parent / "perfbench" / "data" / "sf0.01"
 
 
 def value_hash(df: pd.DataFrame) -> str:
@@ -51,16 +54,40 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-
-    spark = get_spark("oracle-check")
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per sf table."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
+    return con
+
+
+def compare(sdf: pd.DataFrame, ddf: pd.DataFrame) -> str | None:
+    """None when the Spark and DuckDB results match (sorted column
+    names, row count, order-insensitive hash of normalized values),
+    else the reason, with the first differing rows on a hash mismatch."""
+    s_cols, d_cols = sorted(sdf.columns), sorted(ddf.columns)
+    if s_cols != d_cols:
+        return f"columns {s_cols} vs {d_cols}"
+    if len(sdf) != len(ddf):
+        return f"rows {len(sdf)} vs {len(ddf)}"
+    ns, nd = normalize(sdf), normalize(ddf)
+    if value_hash(ns) == value_hash(nd):
+        return None
+    ns = ns[s_cols].sort_values(s_cols).reset_index(drop=True)
+    nd = nd[s_cols].sort_values(s_cols).reset_index(drop=True)
+    diff = ns.astype(str).compare(nd.astype(str))
+    return f"value hash mismatch (rows={len(sdf)})\n{diff.head(5)}"
+
+
+def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else str(REPO_SF)
+    only = set(sys.argv[2:])
+
+    spark = get_spark("oracle-check")
+    con = connect(sf_dir)
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -83,28 +110,12 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: duckdb error: {exc}")
             continue
-        s_n, d_n = len(sdf), len(ddf)
-        s_cols, d_cols = sorted(sdf.columns), sorted(ddf.columns)
-        if s_cols != d_cols:
+        problem = compare(sdf, ddf)
+        if problem:
             failures.append(name)
-            print(f"FAIL {name}: columns {s_cols} vs {d_cols}")
-            continue
-        if s_n != d_n:
-            failures.append(name)
-            print(f"FAIL {name}: rows {s_n} vs {d_n}")
-            continue
-        sh, dh = value_hash(normalize(sdf)), value_hash(normalize(ddf))
-        if sh != dh:
-            failures.append(name)
-            print(f"FAIL {name}: value hash mismatch (rows={s_n})")
-            ns, nd = normalize(sdf), normalize(ddf)
-            cols = sorted(ns.columns)
-            ns = ns[cols].sort_values(cols).reset_index(drop=True)
-            nd = nd[cols].sort_values(cols).reset_index(drop=True)
-            diff = ns.astype(str).compare(nd.astype(str))
-            print(diff.head(5))
+            print(f"FAIL {name}: {problem}")
         else:
-            print(f"OK   {name} (rows={s_n})")
+            print(f"OK   {name} (rows={len(sdf)})")
 
     print(f"\n{len(failures)} failures: {failures}")
     return 1 if failures else 0
