@@ -1,7 +1,7 @@
 """Multimodal column operators (training-pipeline additions).
 
 Images/audio/video ride as opaque ``binary`` columns with typed metadata
-structs; decode/resize/frame-sample run as Arrow-batched pandas UDFs over
+structs; decode/resize run as Arrow-batched pandas UDFs over
 ``mapInPandas``.  The decode kernels are STUBBED in this sandbox (no
 image/audio libraries installed) behind ``_require_codec`` — the
 Spark-side plumbing (schemas, batch shape, partitioning) is real and
@@ -133,18 +133,6 @@ def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
         for pdf in it:
             if len(pdf):
                 _require_codec("image-resize")
-            yield pdf
-
-    return media.mapInPandas(_batches, MEDIA)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling — STUB (no codec); plumbing real."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf):
-                _require_codec("video-frame-sample")
             yield pdf
 
     return media.mapInPandas(_batches, MEDIA)

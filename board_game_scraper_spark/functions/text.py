@@ -93,30 +93,6 @@ def clear_list(values) -> list | None:
     return out or None
 
 
-def clear_list_col(col):
-    """Column version of clear_list: array_distinct(filter(non-falsey)),
-    NULL when empty — pure built-ins (JVM-side), SURVEY §2.10."""
-    cleaned = F.array_distinct(
-        F.filter(col, lambda e: e.isNotNull() & (e != F.lit("")))
-    )
-    return F.when(F.size(cleaned) > 0, cleaned)
-
-
-def validate_range_col(col, lower=None, upper=None):
-    """Value in [lower, upper] else NULL (utils.py:190-197, C8)."""
-    cond = F.lit(True)
-    if lower is not None:
-        cond = cond & (col >= F.lit(lower))
-    if upper is not None:
-        cond = cond & (col <= F.lit(upper))
-    return F.when(cond, col)
-
-
-def normalize_space_col(col):
-    """JVM-side normalize-space (no UDF) for already-tagless text."""
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
 def limit_images_col(col, n: int):
     """C11 (pipelines.py:187-239): copy first n URLs; 0 → none (NULL),
     -1 → all."""

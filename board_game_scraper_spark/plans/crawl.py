@@ -24,6 +24,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import schemas
 from ..sources.fetch import fetch_from_table
@@ -36,6 +37,9 @@ from .seen import SnapshotBloom, filter_unseen
 MAX_ATTEMPTS = 3
 # schedule()'s phase-1 skew-guard salt buckets per host
 SALT_BUCKETS = 8
+# output width of every snapshot write: a round's writes are small, and
+# a 32-way write costs ~3 s in task-commit overhead
+WRITE_COALESCE = 4
 
 
 def callback_kind_col(url_canon):
@@ -84,6 +88,35 @@ def callback_kind_col(url_canon):
     )
 
 
+def _frontier_candidates(urls: DataFrame, discovery_round: int,
+                         not_before_round: int, priority) -> DataFrame:
+    """FRONTIER rows for the raw ``url`` column of ``urls``: canonicalize
+    (C1-C6), drop invalid URLs, keep one row per url_hash (highest
+    priority, then url_canon).  The one builder of frontier rows from
+    raw URLs — seed, requeue and the seed-request fold all use it."""
+    from ..functions.canon import canonicalize_url
+
+    c = urls.withColumn("_c", canonicalize_url(F.col("url")))
+    rows = c.where(F.col("_c.url_canon").isNotNull()).select(
+        "url",
+        F.col("_c.url_canon").alias("url_canon"),
+        F.xxhash64("_c.url_canon").alias("url_hash"),
+        F.col("_c.host").alias("host"),
+        priority.cast("int").alias("priority"),
+        F.lit(discovery_round).alias("discovery_round"),
+        F.lit(0).cast("long").alias("discovery_seq"),
+        callback_kind_col(F.col("_c.url_canon")).alias("callback_kind"),
+        F.lit(0).alias("attempt"),
+        F.lit(not_before_round).alias("not_before_round"),
+        F.lit(None).cast("map<string,string>").alias("meta"),
+    )
+    w = Window.partitionBy("url_hash").orderBy(
+        F.col("priority").desc(), F.col("url_canon")
+    )
+    return (rows.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1).drop("_rn"))
+
+
 class _KindView:
     """Read-only per-kind projection of the combined ``items`` table
     (partition-pruned on ``item_kind``).  Keeps the round-2 per-kind
@@ -108,13 +141,9 @@ class CrawlEngine:
         pages: DataFrame,
         window_sec: float = 60.0,
         bloom_shards: int = 64,
-        use_bloom: bool = True,
-        record_schedule: bool = False,
-        write_coalesce: int | None = 4,
+        compact_every: int = 8,
         obey_robots: bool = False,
         adaptive_politeness: bool = False,
-        track_last_scraped: bool = False,
-        compact_every: int = 8,
         use_ids_seen: bool = False,
     ):
         self.spark = spark
@@ -122,22 +151,19 @@ class CrawlEngine:
         self.pages = pages
         self.window_sec = window_sec
         self.salt_buckets = SALT_BUCKETS  # read by perfbench/crawlwork.py
-        # Snapshot writes per round are small at sandbox scale; 32-way
-        # writes cost ~3s each in task-commit overhead.  On a cluster with
-        # large rounds pass None (let AQE size the output).
-        self.write_coalesce = write_coalesce
         # Frontier commits are merge-on-read deltas (O(scheduled+discovered)
         # per round, not O(frontier)); fold them back every N rounds.
         self.compact_every = compact_every
         t = lambda name, schema: SnapshotTable(spark, self.root / name, schema)
+        # Reference crawl policies, opt-in because each one, on, changes
+        # the URL stream the order-equality simulator pins: robots.txt
+        # obedience (F5), AutoThrottle-style budgets from host_state
+        # (F4), and item-level id dedup (F7, bgg.py:229-242,256-261
+        # _ids_seen — re-packs API batches so ids discovered on
+        # overlapping pages fetch once even when the page-local batch
+        # URLs differ).
         self.obey_robots = obey_robots
         self.adaptive_politeness = adaptive_politeness
-        self.track_last_scraped = track_last_scraped
-        # F7: item-level id dedup (bgg.py:229-242,256-261 _ids_seen) —
-        # opt-in because it re-packs API batches at the engine level
-        # (ids discovered on overlapping pages fetch once even when the
-        # page-local batch URLs differ), which changes the URL stream the
-        # order-equality simulator pins.
         self.use_ids_seen = use_ids_seen
         self.frontier = t("frontier", schemas.FRONTIER)
         self.ids_seen = t("ids_seen", schemas.IDS_SEEN)
@@ -145,14 +171,15 @@ class CrawlEngine:
         self.seen = t("url_seen", schemas.URL_SEEN)
         self.robots = t("robots", schemas.ROBOTS)
         self.host_state = t("host_state", schemas.HOST_STATE)
-        self.last_scraped = t("last_scraped", schemas.LAST_SCRAPED)
         # ONE combined round-output table, partitioned by item_kind: the
         # fused parse stage writes its output directly into this table's
         # next data dir and the round commits it via add_files — the four
         # separate per-kind append jobs of round 2 (each re-reading the
         # scratch parquet and rewriting it) are gone, along with their
         # manifest commits (VERDICT r02 "next round" #1b).  Per-kind
-        # access is a partition-pruned view.
+        # access is a partition-pruned view.  Each round commits exactly
+        # one dir, tagged with its round, so the item_kind=fetch leaves
+        # double as the last-scraped record requeue() reads (F11).
         # hive_dirs: the fused parse write lands partitionBy(item_kind)
         # dirs, which need per-dir reads (every other table gets the
         # O(1)-depth multi-path scan — ADVICE r03 #1).
@@ -172,16 +199,10 @@ class CrawlEngine:
                                  lambda df: df.select("rating.*"))
         self.metrics = t("metrics", schemas.METRICS)
         # Cluster-safe bloom sidecar: bitmaps are snapshot-table rows
-        # (cogroup applyInPandas), not executor-local files.
-        self.bloom = (
-            SnapshotBloom(spark, self.root / "bloom", n_shards=bloom_shards)
-            if use_bloom
-            else None
-        )
-        # For order-equality tests vs the simulator: round ->
-        # {host: [url_canon in sched_rank order]}.
-        self.record_schedule = record_schedule
-        self.schedule_log: dict[int, dict[str, list[str]]] = {}
+        # (cogroup applyInPandas), not executor-local files.  Exact —
+        # false positives go to the seen anti-join — so always on.
+        self.bloom = SnapshotBloom(spark, self.root / "bloom",
+                                   n_shards=bloom_shards)
         # Frontier-size hint carried between rounds (from the previous
         # round's observations — no extra job).  When the pending set is
         # provably small, schedule() drops its phase-1 salted skew guard
@@ -239,22 +260,11 @@ class CrawlEngine:
         older code falls back to ONE exact count()."""
         if self._frontier_rows is not None:
             return self._frontier_rows
-        import json as _json
-
-        snap = self.frontier.current_snapshot()
-        while snap is not None:
+        for snap in self.frontier.history():
             m = snap.get("metrics") or {}
             if "frontier_rows" in m:
                 self._frontier_rows = int(m["frontier_rows"])
                 return self._frontier_rows
-            parent = snap.get("parent")
-            snap = (
-                _json.loads(
-                    (self.frontier.path / "snapshots" / parent).read_text()
-                )
-                if parent
-                else None
-            )
         self._frontier_rows = int(self.frontier.read().count())
         return self._frontier_rows
 
@@ -263,36 +273,7 @@ class CrawlEngine:
 
         Reference: start_requests (bgg.py:198-227) + CSV seeds (S4).
         """
-        from ..functions.canon import canonicalize_url
-
-        c = seeds.withColumn("_c", canonicalize_url(F.col("url")))
-        rows = (
-            c.where(F.col("_c.url_canon").isNotNull())
-            .select(
-                "url",
-                F.col("_c.url_canon").alias("url_canon"),
-                F.xxhash64("_c.url_canon").alias("url_hash"),
-                F.col("_c.host").alias("host"),
-                F.col("priority"),
-                F.lit(0).alias("discovery_round"),
-                F.lit(0).cast("long").alias("discovery_seq"),
-                callback_kind_col(F.col("_c.url_canon")).alias("callback_kind"),
-                F.lit(0).alias("attempt"),
-                F.lit(0).alias("not_before_round"),
-                F.lit(None).cast("map<string,string>").alias("meta"),
-            )
-            # one row per canonical URL (dedup within the seed list)
-            .withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("url_hash").orderBy(
-                        F.col("priority").desc(), F.col("url_canon")
-                    )
-                ),
-            )
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        rows = _frontier_candidates(seeds, 0, 0, F.col("priority"))
         obs = Observation()
         rows = rows.observe(obs, F.count(F.lit(1)).alias("n")).cache()
         # Seen first: its write materializes the cached rows exactly
@@ -304,13 +285,12 @@ class CrawlEngine:
             "url_hash", "url_canon", F.lit(0).alias("first_round")
         )
         self.seen.overwrite(seen_rows, lineage={"round": 0, "stage": "seed"},
-                            coalesce=self.write_coalesce)
+                            coalesce=WRITE_COALESCE)
         n = int(obs.get["n"] or 0)
         self.frontier.overwrite(rows, lineage={"round": 0, "stage": "seed"},
                                 metrics={"frontier_rows": n},
-                                coalesce=self.write_coalesce)
-        if self.bloom is not None:
-            self.bloom.add(seen_rows)
+                                coalesce=WRITE_COALESCE)
+        self.bloom.add(seen_rows)
         self._pending_hint = n
         self._frontier_rows = n
         return n
@@ -359,72 +339,83 @@ class CrawlEngine:
                 window_rounds: int = 6) -> int:
         """Re-crawl already-seen URLs (F11 + extensions.py:148-151
         dont_filter): insert unless successfully fetched within the last
-        ``window_rounds`` rounds (PREVENT_RESCRAPE_FOR analog).
+        ``window_rounds`` rounds (PREVENT_RESCRAPE_FOR analog) or already
+        pending.  Returns the number of rows inserted.
 
         ``urls``: DataFrame with a raw ``url`` column (+ optional
-        priority).  Requires track_last_scraped=True.
+        priority).  The last successful fetches are read from the items
+        table, so the window holds across resume.
         """
-        from ..functions.canon import canonicalize_url
-
-        c = urls.withColumn("_c", canonicalize_url(F.col("url")))
         prio = (F.col("priority") if "priority" in urls.columns
                 else F.lit(1))
-        cand = c.where(F.col("_c.url_canon").isNotNull()).select(
-            F.col("_c.url_canon").alias("url"),
-            F.col("_c.url_canon").alias("url_canon"),
-            F.xxhash64("_c.url_canon").alias("url_hash"),
-            F.col("_c.host").alias("host"),
-            prio.cast("int").alias("priority"),
-            # round_no + 1, NOT round_no: a URL discovered in round_no,
-            # scheduled+failed in round_no, then requeued in round_no
-            # would otherwise collide with the round's pending equality-
-            # delete tuple (url_hash, 0, round_no) and be silently
-            # dropped at the next compact.  Requeued rows are a distinct
-            # generation, same as fresh discoveries.
-            F.lit(round_no + 1).alias("discovery_round"),
-            F.lit(0).cast("long").alias("discovery_seq"),
-            callback_kind_col(F.col("_c.url_canon")).alias("callback_kind"),
-            F.lit(0).alias("attempt"),
-            F.lit(round_no).alias("not_before_round"),
-            F.lit(None).cast("map<string,string>").alias("meta"),
-        )
-        recent = self.last_scraped.read().where(
-            F.col("round") > round_no - window_rounds
-        ).select("url_hash")
-        fresh = cand.join(recent, "url_hash", "left_anti")
-        # also drop anything already pending in the frontier
-        frontier = self.frontier.read()
+        # discovery_round = round_no + 1, NOT round_no: a URL discovered
+        # in round_no, scheduled+failed in round_no, then requeued in
+        # round_no would otherwise collide with the round's pending
+        # equality-delete tuple (url_hash, 0, round_no) and be silently
+        # dropped at the next compact.  Requeued rows are a distinct
+        # generation, same as fresh discoveries.
+        cand = _frontier_candidates(urls, round_no + 1, round_no, prio)
+        recent = self._fetched_ok_after(round_no - window_rounds)
+        return self._insert_pending(
+            cand.join(recent, "url_hash", "left_anti"), "requeue", round_no)
+
+    def _fetched_ok_after(self, after_round: int) -> DataFrame:
+        """``url_hash`` of every status-200 fetch in rounds >
+        ``after_round``: the item_kind=fetch leaves of the items dirs
+        those rounds committed (one dir per round, committed in round
+        order — the walk stops at the first older round)."""
+        leaves = []
+        for snap in self.items.history():
+            if snap["lineage"].get("round", after_round) <= after_round:
+                break
+            leaves += [str(self.items.path / rel / "item_kind=fetch")
+                       for rel in snap["added"]
+                       if "item_kind=fetch" in snap["file_parts"].get(rel, [])]
+        if not leaves:
+            return self.spark.createDataFrame([], "url_hash long")
+        fetch = self.spark.read.schema(
+            StructType([schemas.PARSE_FLAT["fetch"]])).parquet(*leaves)
+        return fetch.where(F.col("fetch.status") == 200).select(
+            F.col("fetch.url_hash").alias("url_hash"))
+
+    def _insert_pending(self, rows: DataFrame, stage: str,
+                        round_no: int) -> int:
+        """Out-of-band frontier insert (requeue, seed-request fold):
+        append the ``rows`` not already pending as one delta commit and
+        return how many there were.
+
+        ONE action: the count rides the prepared write job as an
+        Observation, so the manifest commit that follows carries the
+        exact post-commit row count (frontier_rows()).  Only the delta
+        rows hit disk, never the full frontier (merge-on-read —
+        tables.py).  No "round" lineage key: last_round() must only
+        advance on the end-of-round frontier commit — a round_no tag
+        made a crash-before-round-commit resume skip straight past
+        round_no (ADVICE r03 #4)."""
         obs = Observation()
-        fresh = fresh.join(frontier.select("url_hash"), "url_hash",
-                           "left_anti").observe(
+        fresh = rows.join(self.frontier.read().select("url_hash"),
+                          "url_hash", "left_anti").observe(
             obs, F.count(F.lit(1)).alias("n"))
-        # Delta append: only the requeued rows hit disk, never the full
-        # frontier (merge-on-read — tables.py).  ONE action: the count
-        # rides the prepared write job as an Observation, so the
-        # manifest commit that follows can carry the exact post-commit
-        # row count (frontier_rows()).  No "round" lineage key —
-        # requeue is an out-of-band insert, and the resume marker must
-        # only advance on end-of-round commits.
-        prepared = self.frontier.prepare_delta(
-            appends=fresh, coalesce=self.write_coalesce,
-        )
+        prepared = self.frontier.prepare_delta(appends=fresh,
+                                               coalesce=WRITE_COALESCE)
         n = int(obs.get["n"] or 0)
+        total = self.frontier_rows() + n
         man = self.frontier.commit_prepared_delta(
             prepared,
-            lineage={"stage": "requeue", "at_round": round_no},
-            metrics={"frontier_rows": self.frontier_rows() + n},
+            lineage={"stage": stage, "at_round": round_no},
+            metrics={"frontier_rows": total},
         )
         if n == 0 and man.get("added"):
             # the append observed zero rows — retract the empty data dir
-            # so repeated no-op requeues don't grow the manifest's file
+            # so repeated no-op inserts don't grow the manifest's file
             # list / read fan-in until the next compact (ADVICE r04 #3)
             self.frontier.prune_files(
                 man["added"],
-                lineage={"stage": "requeue_noop", "at_round": round_no},
+                lineage={"stage": f"{stage}_noop", "at_round": round_no},
             )
         if self._pending_hint is not None:
             self._pending_hint += n
-        self._frontier_rows = self.frontier_rows() + n
+        self._frontier_rows = total
         if n:
             self._next_frontier = None
             self._cancel_speculation()
@@ -494,58 +485,15 @@ class CrawlEngine:
         # AFTER this read land in new files and survive the ack below
         # (an external producer may enqueue mid-round — ADVICE r03 #3).
         consumed_files = list(snap["files"])
-        from ..functions.canon import canonicalize_url
-
         batch = self.spark.read.schema(schemas.SEED_REQUESTS).parquet(
             *[str(self.seed_requests.path / rel) for rel in consumed_files]
         ) if consumed_files else self.spark.createDataFrame(
             [], schemas.SEED_REQUESTS
         )
-        c = batch.withColumn("_c", canonicalize_url(F.col("url")))
-        cand = c.where(F.col("_c.url_canon").isNotNull()).select(
-            "url",
-            F.col("_c.url_canon").alias("url_canon"),
-            F.xxhash64("_c.url_canon").alias("url_hash"),
-            F.col("_c.host").alias("host"),
-            F.col("priority"),
-            F.lit(round_no).alias("discovery_round"),
-            F.lit(0).cast("long").alias("discovery_seq"),
-            callback_kind_col(F.col("_c.url_canon")).alias("callback_kind"),
-            F.lit(0).alias("attempt"),
-            F.lit(round_no).alias("not_before_round"),
-            F.lit(None).cast("map<string,string>").alias("meta"),
-        )
-        w = Window.partitionBy("url_hash").orderBy(
-            F.col("priority").desc(), F.col("url_canon")
-        )
-        cand = (cand.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1).drop("_rn"))
-        obs = Observation()
-        fresh = cand.join(self.frontier.read().select("url_hash"),
-                          "url_hash", "left_anti").observe(
-            obs, F.count(F.lit(1)).alias("n"))
-        # ONE action (count observed on the prepared write job; the
-        # manifest commit then carries the exact post-commit row count
-        # for frontier_rows()).  No "round" lineage key: last_round()
-        # must only advance on the end-of-round frontier commit —
-        # tagging this fold with round_no made a
-        # crash-before-round-commit resume skip straight past round_no
-        # (ADVICE r03 #4).
-        prepared = self.frontier.prepare_delta(
-            appends=fresh, coalesce=self.write_coalesce,
-        )
-        n = int(obs.get["n"] or 0)
-        man = self.frontier.commit_prepared_delta(
-            prepared,
-            lineage={"stage": "seed_requests", "at_round": round_no},
-            metrics={"frontier_rows": self.frontier_rows() + n},
-        )
-        if n == 0 and man.get("added"):
-            self.frontier.prune_files(
-                man["added"],
-                lineage={"stage": "seed_requests_noop",
-                         "at_round": round_no},
-            )
+        n = self._insert_pending(
+            _frontier_candidates(batch, round_no, round_no,
+                                 F.col("priority")),
+            "seed_requests", round_no)
         # ack: drop exactly the consumed files (manifest-only commit);
         # files appended since the consuming read stay pending.  The
         # replace compare-and-swaps on the snapshot the remaining list
@@ -571,12 +519,6 @@ class CrawlEngine:
                 break
             except ConcurrentCommitError:
                 continue
-        if self._pending_hint is not None:
-            self._pending_hint += n
-        self._frontier_rows = self.frontier_rows() + n
-        if n:
-            self._next_frontier = None
-            self._cancel_speculation()
         return n
 
     # ------------------------------------------------------------- F7 ids_seen
@@ -643,7 +585,7 @@ class CrawlEngine:
         self.ids_seen.append(
             new_ids.select("bgg_id", F.lit(round_no).alias("first_round")),
             lineage={"round": round_no, "stage": "ids_seen"},
-            coalesce=self.write_coalesce,
+            coalesce=WRITE_COALESCE,
         )
         out = others.unionByName(rebatched).cache()
         new_ids.unpersist()
@@ -700,9 +642,10 @@ class CrawlEngine:
 
         # Fused fetch→parse: ONE pass over the bodies.  Per-URL 'fetch'
         # rows ride along in the scratch output, so retries, per-host
-        # metrics, host-state, and last-scraped all become filtered reads
-        # of the scratch parquet — the fetch join never re-executes and
-        # bodies never sit in executor storage.
+        # metrics and host-state all become filtered reads of the
+        # scratch parquet (and, once committed, requeue's last-scraped
+        # record) — the fetch join never re-executes and bodies never
+        # sit in executor storage.
         fetched_full = fetch_from_table(scheduled, self.pages)
 
         # The fused write lands DIRECTLY in the items table's next data
@@ -725,11 +668,11 @@ class CrawlEngine:
             # task/commit overhead per tail round at local[32]
             # (tools/probe_retry).  A post-parse exchange of the
             # tiny flat output costs ~nothing and cuts the write to
-            # write_coalesce tasks.  Gated on a PROVABLY small
+            # WRITE_COALESCE tasks.  Gated on a PROVABLY small
             # frontier so a real round's parse output (millions of
             # flat rows) never crosses this exchange; parse
             # parallelism itself is untouched either way.
-            parsed = parsed.repartition(self.write_coalesce or 4)
+            parsed = parsed.repartition(WRITE_COALESCE)
         # 'retryable' mirrors retry_rows' filter EXACTLY (same
         # RETRYABLE tuple, same attempt bound) so the round can skip
         # the retries delta write entirely when it would be empty —
@@ -766,12 +709,9 @@ class CrawlEngine:
         will actually run that round, and never under obey_robots (the
         robots refresh mutates a table).  The speculative job commits
         NOTHING — consuming it or discarding it is equally safe."""
-        import os as _os
-
         if (self._round_window_end is None
                 or next_round >= self._round_window_end
-                or self.obey_robots
-                or _os.getenv("SPARK_GRAFT_NO_DOUBLE_BUFFER") == "1"):
+                or self.obey_robots):
             return
         from concurrent.futures import ThreadPoolExecutor as _TPE
 
@@ -867,13 +807,6 @@ class CrawlEngine:
         _mark("parse_scratch_write")
         n_scheduled = int(parse_counts.get("fetch") or 0)
         n_frontier = self.frontier_rows()
-        if self.record_schedule and n_scheduled:
-            log: dict[str, list[str]] = {}
-            for row in scheduled.select(
-                "host", "sched_rank", "url_canon"
-            ).orderBy("host", "sched_rank").collect():
-                log.setdefault(row["host"], []).append(row["url_canon"])
-            self.schedule_log[round_no] = log
         if n_scheduled == 0:
             min_nb = obs_front.get["min_nb"]
             frontier.unpersist()
@@ -1034,13 +967,6 @@ class CrawlEngine:
             ).unionByName(updated)
             writes.append(("host_state", lambda: self.host_state.overwrite(
                 merged, lineage=lineage, coalesce=1)))
-        if self.track_last_scraped:
-            writes.append(("last_scraped", lambda: self.last_scraped.append(
-                fetch_rows.where(F.col("status") == 200).select(
-                    "url_hash", "url_canon",
-                    F.lit(round_no).alias("round"),
-                ),
-                lineage=lineage, coalesce=self.write_coalesce)))
         from concurrent.futures import ThreadPoolExecutor
 
         empty_prep = {"files": [], "dfiles": []}
@@ -1058,7 +984,7 @@ class CrawlEngine:
             # Stage A — everything that depends only on the committed
             # scratch / caches runs concurrently: the delta's three data
             # writes (deletes, retries, fresh), the items manifest
-            # commit, and the opt-in host_state/last_scraped writes.
+            # commit, and the opt-in host_state write.
             # The FRESH prepare is the discovery branch's single
             # materializer (obs_disc/obs_fresh ride its write job —
             # driving-safe per the counts note above); the seen append
@@ -1074,7 +1000,7 @@ class CrawlEngine:
                     deletes=scheduled.select(
                         "url_hash", "attempt", "discovery_round"
                     ),
-                    coalesce=self.write_coalesce,
+                    coalesce=WRITE_COALESCE,
                 )
             )
             # Retries prepare, gated on the parse-observed retryable
@@ -1083,7 +1009,7 @@ class CrawlEngine:
             fut_ret = (
                 pool.submit(
                     lambda: self.frontier.prepare_delta(
-                        appends=retries, coalesce=self.write_coalesce,
+                        appends=retries, coalesce=WRITE_COALESCE,
                     )
                 )
                 if parse_counts["retryable"]
@@ -1092,7 +1018,7 @@ class CrawlEngine:
             fut_fresh = (
                 pool.submit(
                     lambda: self.frontier.prepare_delta(
-                        appends=fresh, coalesce=self.write_coalesce,
+                        appends=fresh, coalesce=WRITE_COALESCE,
                     )
                 )
                 if n_ok
@@ -1125,9 +1051,8 @@ class CrawlEngine:
                     F.lit(round_no + 1).alias("first_round"),
                 )
                 self.seen.append(sd, lineage=lineage,
-                                 coalesce=self.write_coalesce)
-                if self.bloom is not None:
-                    self.bloom.add(sd)
+                                 coalesce=WRITE_COALESCE)
+                self.bloom.add(sd)
 
             fut_seen = pool.submit(_seen_write) if n_fresh else None
             metrics_rows = host_metrics.select(
@@ -1139,7 +1064,7 @@ class CrawlEngine:
             fut_m = pool.submit(
                 lambda: self.metrics.append(
                     metrics_rows, lineage=lineage,
-                    coalesce=self.write_coalesce,
+                    coalesce=WRITE_COALESCE,
                 )
             )
             prep_del = fut_del.result()
@@ -1210,7 +1135,7 @@ class CrawlEngine:
             # never outlive one compaction (ADVICE r05 #1).
             man_c = self.frontier.compact(
                 lineage={"round": round_no, "stage": "compact"},
-                coalesce=self.write_coalesce,
+                coalesce=WRITE_COALESCE,
                 count_metric="frontier_rows",
             )
             exact = int(man_c["metrics"]["frontier_rows"])
@@ -1224,14 +1149,13 @@ class CrawlEngine:
                 )
             pending = exact
             self._frontier_rows = exact
-            if self.bloom is not None:
-                # Fold the O(new-keys) delta rows accumulated since the
-                # last fold into the per-shard bitmaps (same cadence as
-                # the frontier compaction — VERDICT r02 #2).
-                self.bloom.compact()
+            # Fold the O(new-keys) delta rows accumulated since the
+            # last fold into the per-shard bitmaps (same cadence as
+            # the frontier compaction — VERDICT r02 #2).
+            self.bloom.compact()
             # Bound the append-only side tables' file counts on the same
             # cadence (VERDICT r04 'wrong' #2: url_seen — scanned every
-            # round by filter_unseen — accumulated ~write_coalesce files
+            # round by filter_unseen — accumulated ~WRITE_COALESCE files
             # per round forever).  Minor (bin-pack) compaction rewrites
             # only the small tail since the last fold, never the whole
             # table — O(rows/round) amortized even at a 10^10-row seen
@@ -1239,12 +1163,9 @@ class CrawlEngine:
             # the resume marker.
             side_lin = {"stage": "compact_minor", "at_round": round_no}
             self.seen.compact_minor(
-                lineage=side_lin, coalesce=self.write_coalesce)
+                lineage=side_lin, coalesce=WRITE_COALESCE)
             self.metrics.compact_minor(
-                lineage=side_lin, coalesce=self.write_coalesce)
-            if self.track_last_scraped:
-                self.last_scraped.compact_minor(
-                    lineage=side_lin, coalesce=self.write_coalesce)
+                lineage=side_lin, coalesce=WRITE_COALESCE)
 
         # Fast-forward hint: when this round consumed the whole frontier
         # (no unscheduled leftover, no fresh discoveries) and only
@@ -1293,19 +1214,10 @@ class CrawlEngine:
         whose lineage carries a "round" key.  Out-of-band commits
         (requeue, seed-request folds) are tagged with "at_round" instead
         and are skipped — they must not advance the resume marker."""
-        snap = self.frontier.current_snapshot()
-        while snap is not None:
+        for snap in self.frontier.history():
             lin = snap.get("lineage") or {}
             if "round" in lin:
                 return int(lin["round"])
-            parent = snap.get("parent")
-            if not parent:
-                break
-            import json as _json
-
-            snap = _json.loads(
-                (self.frontier.path / "snapshots" / parent).read_text()
-            )
         return -1
 
     def crawl(self, n_rounds: int, start_round: int | None = None) -> list[dict]:

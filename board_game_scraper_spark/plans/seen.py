@@ -265,19 +265,17 @@ class SnapshotBloom:
 def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame,
-    bloom: "SnapshotBloom | None" = None,
+    bloom: SnapshotBloom,
 ) -> DataFrame:
     """Rows of ``candidates`` whose url_hash is NOT in ``seen``.
 
-    With a bloom sidecar: definite-new rows bypass the exact join; only
-    bloom-maybe rows shuffle against the seen table.  Without: plain
-    left_anti (J1 shape, bgg.py:256-261).
+    Definite-new rows (bloom miss) bypass the exact join; only
+    bloom-maybe rows shuffle against the seen table (left_anti, J1
+    shape, bgg.py:256-261).
     """
-    seen_keys = seen.select("url_hash")
-    if bloom is None:
-        return candidates.join(seen_keys, "url_hash", "left_anti")
     flagged = bloom.prefilter(candidates)
     definite_new = flagged.where(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = flagged.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = maybe.join(seen_keys, "url_hash", "left_anti")
+    confirmed_new = maybe.join(seen.select("url_hash"), "url_hash",
+                               "left_anti")
     return definite_new.unionByName(confirmed_new)

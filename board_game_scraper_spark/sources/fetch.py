@@ -14,20 +14,11 @@ default non-200 handling).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-FETCH_COLS = [
-    "url_canon", "url_hash", "host", "priority", "callback_kind", "attempt",
-    "status", "content_type", "body", "latency_ms",
-]
 
-
-def fetch_from_table(scheduled: DataFrame, pages: DataFrame,
-                     broadcast_scheduled: bool = True) -> DataFrame:
+def fetch_from_table(scheduled: DataFrame, pages: DataFrame) -> DataFrame:
     """Synthetic fetch: scheduled batch → pages corpus lookup.
 
     The corpus is the big side (at 100 TB it IS the response cache, S6);
@@ -38,23 +29,9 @@ def fetch_from_table(scheduled: DataFrame, pages: DataFrame,
     at local[32]).  Misses are recovered with a key-only anti-join
     (column-pruned — bodies again never move) and surface as status 404
     (Scrapy's default non-200 handling).
-
-    ``broadcast_scheduled=False`` falls back to the plain shuffle join —
-    use when one round schedules more than fits in a broadcast (then the
-    corpus table should be bucketed by url_canon so only the batch side
-    shuffles).
     """
     sched_cols = ["url_canon", "url_hash", "host", "priority",
                   "callback_kind", "attempt"]
-    if not broadcast_scheduled:
-        joined = scheduled.join(pages, "url_canon", "left")
-        return joined.select(
-            *sched_cols,
-            F.coalesce(F.col("status"), F.lit(404)).alias("status"),
-            "content_type",
-            "body",
-            "latency_ms",
-        )
     hits = pages.join(F.broadcast(scheduled), "url_canon").select(
         *sched_cols, "status", "content_type", "body", "latency_ms"
     )
@@ -69,27 +46,3 @@ def fetch_from_table(scheduled: DataFrame, pages: DataFrame,
     )
     return hits.unionByName(misses)
 
-
-def fetch_http(scheduled: DataFrame, timeout_sec: float = 30.0) -> DataFrame:
-    """Real HTTP fetch stage — mapInPandas per (host) partition.
-
-    STUB in this sandbox (no network); the Spark-side plumbing (schema,
-    host partitioning, Arrow batch shape) is real and tested via
-    ``fetch_from_table``.  On a cluster, replace ``_fetch_batch`` with a
-    urllib/requests session honoring the per-host delay carried in the
-    batch (header auth per middlewares.py:9-27).
-    """
-
-    def _fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            raise NotImplementedError(
-                "network fetch not available in sandbox; use fetch_from_table"
-            )
-        yield pd.DataFrame(columns=FETCH_COLS)  # pragma: no cover
-
-    schema = (
-        "url_canon string, url_hash long, host string, priority int, "
-        "callback_kind string, attempt int, status int, content_type string, "
-        "body string, latency_ms int"
-    )
-    return scheduled.repartition("host").mapInPandas(_fetch_batch, schema)

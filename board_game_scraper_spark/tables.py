@@ -41,6 +41,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Iterator
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -86,16 +87,19 @@ class SnapshotTable:
         manifest = self.path / "snapshots" / name
         return json.loads(manifest.read_text())
 
+    def history(self) -> Iterator[dict]:
+        """Committed snapshots, newest first, each manifest read only
+        when reached — stop early to read just the recent ones."""
+        snap = self.current_snapshot()
+        while snap is not None:
+            yield snap
+            parent = snap.get("parent")
+            snap = (json.loads((self.path / "snapshots" / parent).read_text())
+                    if parent else None)
+
     def snapshots(self) -> list[dict]:
         """All committed snapshots, oldest first (manifest chain)."""
-        out, snap = [], self.current_snapshot()
-        while snap is not None:
-            out.append(snap)
-            parent = snap.get("parent")
-            if not parent:
-                break
-            snap = json.loads((self.path / "snapshots" / parent).read_text())
-        return list(reversed(out))
+        return list(reversed(list(self.history())))
 
     def _commit(self, files: list[str], mode: str, lineage: dict | None,
                 metrics: dict | None,
@@ -283,14 +287,6 @@ class SnapshotTable:
         rel = self._write_data(df, partition_by, coalesce)
         return self._commit([rel], "overwrite", lineage, metrics)
 
-    def commit_empty(self, lineage: dict | None = None,
-                     metrics: dict | None = None) -> dict:
-        """Commit a snapshot with no data change (metrics/lineage only)."""
-        current = self.current_snapshot()
-        files = current["files"] if current else []
-        return self._commit(files, "append" if current else "overwrite",
-                            lineage, metrics)
-
     def prepare_delta(self, appends: DataFrame | None = None,
                       deletes: DataFrame | None = None,
                       coalesce: int | None = None) -> dict:
@@ -369,7 +365,7 @@ class SnapshotTable:
         untouched, rewrite the rest into a single dir.
 
         For append-only tables that are READ every round (url_seen) or
-        accumulate history (metrics, last_scraped), a full ``compact``
+        accumulate history (metrics), a full ``compact``
         rewrites O(table) on every cadence tick — at a 10^10-row seen
         set that is the whole table over and over.  Minor compaction
         rewrites only the small tail appended since the last fold, so

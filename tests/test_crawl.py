@@ -9,6 +9,7 @@ from board_game_scraper_spark import schemas, synth
 from board_game_scraper_spark.functions.text import clean_text_one
 from board_game_scraper_spark.plans.crawl import CrawlEngine
 from board_game_scraper_spark.plans.simulator import simulate
+from conftest import record_schedule
 
 N_BROWSE, N_USERS, N_OTHER = 5, 10, 5
 N_ROUNDS = 6
@@ -20,23 +21,24 @@ def crawl_run(spark, corpus_small, tmp_path_factory):
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
     pages = spark.createDataFrame(pages_pd, schemas.PAGES)
     root = tmp_path_factory.mktemp("crawl")
-    eng = CrawlEngine(spark, root, pages, record_schedule=True)
+    eng = CrawlEngine(spark, root, pages)
+    log = record_schedule(eng)
     eng.seed(seeds)
     metrics = eng.crawl(N_ROUNDS)
     sim = simulate(
         [(r.url, int(r.priority)) for r in seeds_pd.itertuples()],
         N_ROUNDS, N_BROWSE, N_USERS,
     )
-    return eng, sim, metrics
+    return eng, sim, metrics, log
 
 
 def test_schedule_order_equality(crawl_run):
     """Per-(round, host) scheduled URL *order* matches the simulator —
     the SURVEY §5 crawl-order-equality gate."""
-    eng, sim, _ = crawl_run
+    _, sim, _, schedule_log = crawl_run
     engine_log = {
         (rnd, host): urls
-        for rnd, hosts in eng.schedule_log.items()
+        for rnd, hosts in schedule_log.items()
         for host, urls in hosts.items()
     }
     sim_log = {k: v for k, v in sim.schedule.items() if v}
@@ -44,7 +46,7 @@ def test_schedule_order_equality(crawl_run):
 
 
 def test_seen_membership_equality(crawl_run):
-    eng, sim, _ = crawl_run
+    eng, sim, *_ = crawl_run
     engine_seen = {
         r["url_canon"] for r in eng.seen.read().collect()
     }
@@ -52,7 +54,7 @@ def test_seen_membership_equality(crawl_run):
 
 
 def test_fetched_ok_equality(crawl_run):
-    eng, sim, _ = crawl_run
+    eng, sim, *_ = crawl_run
     engine_ok = {r["doc_id"] for r in eng.documents.read().collect()}
     # every successfully fetched+parsed page with spans is a document
     assert engine_ok <= set(sim.fetched_ok)
@@ -63,7 +65,7 @@ def test_fetched_ok_equality(crawl_run):
 def test_span_sequence_equality_thing_pages(crawl_run):
     """input_hint invariant: spans (kind, text, media_ref, order) equal an
     independent oracle built from corpus ground truth (not from XML)."""
-    eng, _, _ = crawl_run
+    eng, *_ = crawl_run
     docs = {
         r["doc_id"]: r["spans"]
         for r in eng.documents.read().collect()
@@ -103,7 +105,7 @@ def test_span_sequence_equality_thing_pages(crawl_run):
 def test_entity_hack_in_parsed_names(crawl_run):
     """Games with gid % 7 == 0 carry the double-encoded 'Ü' — the C7
     chain must decode it (utils.py:78-86)."""
-    eng, _, _ = crawl_run
+    eng, *_ = crawl_run
     names = {
         r["bgg_id"]: r["name"]
         for r in eng.games.read().where(F.col("bgg_id").isNotNull()).collect()
@@ -116,7 +118,7 @@ def test_entity_hack_in_parsed_names(crawl_run):
 
 def test_rating_composite_key(crawl_run):
     """RatingItem id = '{user}:{bgg_id}' lowercased (bgg.py:709-710)."""
-    eng, _, _ = crawl_run
+    eng, *_ = crawl_run
     rows = eng.ratings.read().limit(50).collect()
     assert rows
     for r in rows:
@@ -125,7 +127,7 @@ def test_rating_composite_key(crawl_run):
 
 
 def test_metrics_lineage_present(crawl_run):
-    eng, _, metrics = crawl_run
+    eng, _, metrics, _ = crawl_run
     snap = eng.frontier.current_snapshot()
     assert snap["lineage"]["round"] >= 1
     assert "scheduled" in snap["metrics"]
@@ -178,7 +180,7 @@ def test_frontier_delta_commits_are_incremental(spark, tmp_path):
     pages = spark.createDataFrame(pages_pd, schemas.PAGES)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
     eng = CrawlEngine(spark, tmp_path / "mor", pages, window_sec=3600.0,
-                      use_bloom=False, compact_every=0)
+                      compact_every=0)
     eng.seed(seeds)
     snap0 = eng.frontier.current_snapshot()
     assert snap0["mode"] == "overwrite" and snap0["delete_files"] == []

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from board_game_scraper_spark import schemas, synth
 from board_game_scraper_spark.plans.crawl import CrawlEngine
+from conftest import record_schedule
 
 
 def _mk(spark, pages_pd, tmp, **kw):
@@ -26,12 +27,12 @@ def test_robots_blocks_disallowed(spark, tmp_path):
          {"url": synth.luding_url(1), "source": "luding", "priority": 0},
          {"url": synth.luding_url(2), "source": "luding", "priority": 0}])
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = _mk(spark, pages_pd, tmp_path / "rb", use_bloom=False,
-              obey_robots=True, record_schedule=True)
+    eng = _mk(spark, pages_pd, tmp_path / "rb", obey_robots=True)
+    schedule_log = record_schedule(eng)
     eng.seed(seeds)
     eng.crawl(2)
     scheduled_hosts = {
-        h for log in eng.schedule_log.values() for h in log
+        h for log in schedule_log.values() for h in log
     }
     assert "www.luding.org" not in scheduled_hosts
     assert "boardgamegeek.com" in scheduled_hosts
@@ -44,12 +45,10 @@ def test_robots_allows_by_default(spark, tmp_path):
     """Default corpus robots (disallow /private/ only) changes nothing."""
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    a = _mk(spark, pages_pd, tmp_path / "a", use_bloom=False,
-            obey_robots=True)
+    a = _mk(spark, pages_pd, tmp_path / "a", obey_robots=True)
     a.seed(seeds)
     ra = a.crawl(2)
-    b = _mk(spark, pages_pd, tmp_path / "b", use_bloom=False,
-            obey_robots=False)
+    b = _mk(spark, pages_pd, tmp_path / "b", obey_robots=False)
     b.seed(seeds)
     rb = b.crawl(2)
     assert [m["scheduled"] for m in ra] == [m["scheduled"] for m in rb]
@@ -59,8 +58,7 @@ def test_adaptive_politeness_backoff(spark, tmp_path):
     """429-heavy host doubles its delay → smaller budget next round."""
     seeds_pd, pages_pd = synth.corpus(n_browse=5, n_users=8, n_other=3)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = _mk(spark, pages_pd, tmp_path / "ap", use_bloom=False,
-              adaptive_politeness=True)
+    eng = _mk(spark, pages_pd, tmp_path / "ap", adaptive_politeness=True)
     eng.seed(seeds)
     eng.run_round(1)
     state = {r["host"]: r for r in eng.host_state.read().collect()}
@@ -74,19 +72,37 @@ def test_adaptive_politeness_backoff(spark, tmp_path):
     assert budgets["boardgamegeek.com"][0] == bgg["delay_sec"]
 
 
+def _fetch_rows(eng, round_no=None):
+    """The item_kind=fetch rows of the items dir committed by round
+    ``round_no`` (of every round when None)."""
+    leaves = [str(eng.items.path / rel / "item_kind=fetch")
+              for snap in eng.items.history()
+              if round_no is None or snap["lineage"]["round"] == round_no
+              for rel in snap["added"]]
+    return eng.spark.read.parquet(*leaves)
+
+
+def _fetched_ok(eng, round_no=None):
+    """url_canon of the status-200 fetches (see _fetch_rows)."""
+    return [r["url_canon"] for r in _fetch_rows(eng, round_no)
+            .where(F.col("fetch.status") == 200).collect()]
+
+
 def test_requeue_respects_rescrape_window(spark, tmp_path):
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = _mk(spark, pages_pd, tmp_path / "rq", use_bloom=False,
-              track_last_scraped=True)
+    eng = _mk(spark, pages_pd, tmp_path / "rq")
     eng.seed(seeds)
     eng.crawl(3)
     last = eng.last_round()
-    ok_urls = [r["url_canon"] for r in
-               eng.last_scraped.read().limit(3).collect()]
+    ok_urls = _fetched_ok(eng)[:3]
     assert ok_urls
     urls = spark.createDataFrame([(u,) for u in ok_urls], "url string")
     # within the window → suppressed (extensions.py:137-145)
+    assert eng.requeue(urls, last + 1, window_rounds=10) == 0
+    # the window is read from the committed items table, so a fresh
+    # engine over the same root (resume) applies it too
+    eng = _mk(spark, pages_pd, tmp_path / "rq")
     assert eng.requeue(urls, last + 1, window_rounds=10) == 0
     # window elapsed → re-inserted despite being in the seen set
     n = eng.requeue(urls, last + 1, window_rounds=0)
@@ -98,6 +114,29 @@ def test_requeue_respects_rescrape_window(spark, tmp_path):
     assert m["scheduled"] >= len(ok_urls)
 
 
+def test_requeue_inserts_one_row_per_canonical_url(spark, tmp_path):
+    """A URL requeued twice plus a variant canonicalizing to the same
+    url_canon (upper-case host) is one frontier row, fetched once."""
+    seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
+    seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
+    # window_sec=1e6: every eligible row is scheduled each round
+    eng = _mk(spark, pages_pd, tmp_path / "rqd", window_sec=1e6)
+    eng.seed(seeds)
+    eng.crawl(3)
+    last = eng.last_round()
+    bgg = "https://boardgamegeek.com/"
+    url = next(u for u in _fetched_ok(eng) if u.startswith(bgg))
+    variant = "https://BoardGameGeek.COM/" + url[len(bgg):]
+    urls = spark.createDataFrame([(url,), (url,), (variant,)],
+                                 "url string")
+    assert eng.requeue(urls, last + 1, window_rounds=0) == 1
+    pending = [r["url_canon"] for r in eng.frontier.read().collect()]
+    assert pending.count(url) == 1
+    eng.run_round(last + 1)
+    fetches = _fetch_rows(eng, last + 1)
+    assert fetches.where(F.col("url_canon") == url).count() == 1
+
+
 def test_requeue_same_round_survives_pending_deletes(spark, tmp_path):
     """ADVICE r02: a URL discovered in round r-1 (discovery_round = r),
     scheduled in round r, then requeued in round r must NOT be shadowed
@@ -106,13 +145,11 @@ def test_requeue_same_round_survives_pending_deletes(spark, tmp_path):
     so they survive read-time delete application and compaction."""
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = _mk(spark, pages_pd, tmp_path / "rqs", use_bloom=False,
-              track_last_scraped=True, compact_every=0)
+    eng = _mk(spark, pages_pd, tmp_path / "rqs", compact_every=0)
     eng.seed(seeds)
     eng.run_round(1)   # fetches seeds, discovers rows w/ discovery_round=2
     eng.run_round(2)   # schedules them → pending deletes (hash, 0, 2)
-    ok2 = [r["url_canon"] for r in eng.last_scraped.read()
-           .where(F.col("round") == 2).limit(2).collect()]
+    ok2 = _fetched_ok(eng, 2)[:2]
     assert ok2
     urls = spark.createDataFrame([(u,) for u in ok2], "url string")
     n = eng.requeue(urls, 2, window_rounds=0)
@@ -142,7 +179,7 @@ def test_crawl_fast_forwards_empty_rounds(spark, tmp_path):
     seeds = spark.createDataFrame(
         pd.DataFrame({"url": rows.url_canon, "source": "t",
                       "priority": 0}), schemas.SEEDS)
-    eng = _mk(spark, rows, tmp_path / "ff", use_bloom=False)
+    eng = _mk(spark, rows, tmp_path / "ff")
     eng.seed(seeds)
     ms = eng.crawl(6)
     rounds = [m["round"] for m in ms]
@@ -162,8 +199,8 @@ def test_seed_requests_consumed_with_ack(spark, tmp_path):
     ack survives resume."""
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=6, n_other=2)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = _mk(spark, pages_pd, tmp_path / "sr", use_bloom=False,
-              record_schedule=True)
+    eng = _mk(spark, pages_pd, tmp_path / "sr")
+    schedule_log = record_schedule(eng)
     eng.seed(seeds)
     eng.crawl(3)
     last = eng.last_round()
@@ -174,7 +211,7 @@ def test_seed_requests_consumed_with_ack(spark, tmp_path):
             == 1)
     m = eng.run_round(last + 1)
     assert m["scheduled"] >= 1
-    sched = [u for urls in eng.schedule_log[last + 1].values()
+    sched = [u for urls in schedule_log[last + 1].values()
              for u in urls]
     assert sched.count(url) == 1  # crawled exactly once despite seen
     # acked atomically: queue empty by manifest AND by read
@@ -183,11 +220,11 @@ def test_seed_requests_consumed_with_ack(spark, tmp_path):
     assert eng.seed_requests.read().count() == 0
     # consumed from the frontier too (not re-scheduled next round)
     m2 = eng.run_round(last + 2)
-    sched2 = [u for urls in eng.schedule_log.get(last + 2, {}).values()
+    sched2 = [u for urls in schedule_log.get(last + 2, {}).values()
               for u in urls]
     assert url not in sched2
     # resume: a fresh engine over the same root sees the ack
-    eng2 = _mk(spark, pages_pd, tmp_path / "sr", use_bloom=False)
+    eng2 = _mk(spark, pages_pd, tmp_path / "sr")
     assert (eng2.seed_requests.current_snapshot()["metrics"]["pending"]
             == 0)
     assert eng2._consume_seed_requests(eng2.last_round() + 1) == 0
@@ -235,7 +272,7 @@ def test_ids_seen_rebatches_overlapping_discoveries(spark, tmp_path):
         schemas.SEEDS,
     )
     eng = CrawlEngine(spark, tmp_path / "ids", pages, window_sec=3600.0,
-                      use_bloom=False, use_ids_seen=True)
+                      use_ids_seen=True)
     eng.seed(seeds)
     eng.crawl(2)
     games = eng.games.read()

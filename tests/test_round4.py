@@ -73,7 +73,7 @@ def test_future_retries_not_stranded(spark, tmp_path):
     must not report done: crawl() fast-forwards to their eligibility
     round and fetches them (ADVICE r03 #2)."""
     _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
-    eng = _mk(spark, pages_pd, tmp_path / "fr", use_bloom=False)
+    eng = _mk(spark, pages_pd, tmp_path / "fr")
     _seed_one(spark, eng)
     # Push the seeded row's eligibility to round 5 (a backoff retry shape).
     delayed = eng.frontier.read().withColumn(
@@ -97,7 +97,7 @@ def test_seed_request_enqueued_mid_consume_survives_ack(spark, tmp_path):
     """A request enqueued between the consuming read and the ack stays
     pending (the old ack truncated the whole queue — ADVICE r03 #3)."""
     _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
-    eng = _mk(spark, pages_pd, tmp_path / "sr", use_bloom=False)
+    eng = _mk(spark, pages_pd, tmp_path / "sr")
     _seed_one(spark, eng)
     eng.crawl(6)  # drain the frontier so folds aren't anti-joined away
 
@@ -135,8 +135,7 @@ def test_requeue_does_not_advance_resume_marker(spark, tmp_path):
     """requeue/seed-request folds are out-of-band commits: last_round()
     must keep pointing at the last fully-committed round (ADVICE r03 #4)."""
     _, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
-    eng = _mk(spark, pages_pd, tmp_path / "rm", use_bloom=False,
-              track_last_scraped=True)
+    eng = _mk(spark, pages_pd, tmp_path / "rm")
     _seed_one(spark, eng)
     eng.crawl(2)
     last = eng.last_round()

@@ -12,6 +12,7 @@ from pyspark.sql.types import (
 )
 
 from board_game_scraper_spark import schemas, synth
+from board_game_scraper_spark.plans import crawl
 from board_game_scraper_spark.plans.crawl import CrawlEngine
 from board_game_scraper_spark.tables import (
     ConcurrentCommitError, SnapshotTable,
@@ -122,18 +123,19 @@ def test_compact_minor_preserves_metrics_and_respects_deletes(
     assert {r["k"] for r in t.read().collect()} == {1, 2, 3, 4, 5}
 
 
-def test_crawl_side_table_file_counts_bounded(spark, tmp_path):
+def test_crawl_side_table_file_counts_bounded(spark, tmp_path,
+                                              monkeypatch):
     """A many-round crawl must not accumulate url_seen/metrics files
     forever — the compact_every cadence now folds them too (VERDICT r04
     'wrong' #2)."""
     _seeds_pd, pages_pd = synth.corpus(n_browse=4, n_users=8, n_other=4)
-    eng = _mk(spark, pages_pd, tmp_path / "c", compact_every=3,
-              write_coalesce=2, track_last_scraped=True)
+    monkeypatch.setattr(crawl, "WRITE_COALESCE", 2)
+    eng = _mk(spark, pages_pd, tmp_path / "c", compact_every=3)
     seeds_pd = pd.DataFrame(
         [{"url": synth.browse_url(1), "source": "bgg", "priority": 0}])
     eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
     eng.crawl(8)
-    for table in (eng.seen, eng.metrics, eng.last_scraped):
+    for table in (eng.seen, eng.metrics):
         snap = table.current_snapshot()
         if snap is None:
             continue
@@ -147,8 +149,7 @@ def test_crawl_side_table_file_counts_bounded(spark, tmp_path):
 
 def test_noop_requeue_does_not_grow_frontier_manifest(spark, tmp_path):
     _seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=3)
-    eng = _mk(spark, pages_pd, tmp_path / "c",
-              track_last_scraped=True)
+    eng = _mk(spark, pages_pd, tmp_path / "c")
     seeds_pd = pd.DataFrame(
         [{"url": synth.browse_url(1), "source": "bgg", "priority": 0}])
     eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
@@ -253,7 +254,7 @@ def test_frontier_rows_manifest_arithmetic_and_resume(spark, tmp_path):
     partitions on different executors (measured on local-cluster[4,8]:
     scheduled reported 4895 of 2463 rows, pending went negative)."""
     _, pages_pd = synth.corpus(n_browse=4, n_users=6, n_other=2)
-    eng = _mk(spark, pages_pd, tmp_path / "fr", use_bloom=False)
+    eng = _mk(spark, pages_pd, tmp_path / "fr")
     seeds_pd = pd.DataFrame(
         {"url": pages_pd.url_canon, "source": "t", "priority": 0})
     n = eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
@@ -275,7 +276,7 @@ def test_frontier_rows_manifest_arithmetic_and_resume(spark, tmp_path):
     assert walked == eng.frontier_rows()
 
     # a fresh engine (resume) recovers the count without a Spark job
-    eng2 = _mk(spark, pages_pd, tmp_path / "fr", use_bloom=False)
+    eng2 = _mk(spark, pages_pd, tmp_path / "fr")
     assert eng2.frontier_rows() == eng.frontier_rows()
 
     # scheduled counts come from the write job's fetch rows, not the

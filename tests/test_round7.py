@@ -23,12 +23,11 @@ def _with_retryables(pages_pd, n=6):
     return pages_pd
 
 
-def _crawl_all(spark, pages_pd, seeds_pd, tmp, env_off, monkeypatch,
+def _crawl_all(spark, pages_pd, seeds_pd, tmp, spec_off, monkeypatch,
                rounds=8, **kw):
-    if env_off:
-        monkeypatch.setenv("SPARK_GRAFT_NO_DOUBLE_BUFFER", "1")
-    else:
-        monkeypatch.delenv("SPARK_GRAFT_NO_DOUBLE_BUFFER", raising=False)
+    if spec_off:
+        monkeypatch.setattr(CrawlEngine, "_launch_speculation",
+                            lambda *a, **k: None)
     eng = _mk(spark, pages_pd, tmp, window_sec=1e6, **kw)
     eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
     metrics = eng.crawl(rounds)
@@ -58,18 +57,16 @@ def test_double_buffer_rounds_identical(spark, tmp_path, monkeypatch):
     assert eng_off._spec_hits == 0
 
 
-def test_requeue_cancels_speculation(spark, tmp_path, monkeypatch):
+def test_requeue_cancels_speculation(spark, tmp_path):
     """An out-of-band frontier insert between rounds invalidates the
     in-flight speculation (its frontier is missing the new row); the
     next round falls back to the table read and schedules the insert.
     Manifest arithmetic stays exact throughout."""
     import pandas as pd
 
-    monkeypatch.delenv("SPARK_GRAFT_NO_DOUBLE_BUFFER", raising=False)
     seeds_pd, pages_pd = synth.corpus(n_browse=4, n_users=8, n_other=4)
     pages_pd = _with_retryables(pages_pd)
-    eng = _mk(spark, pages_pd, tmp_path / "c", window_sec=1e6,
-              track_last_scraped=True)
+    eng = _mk(spark, pages_pd, tmp_path / "c", window_sec=1e6)
     eng.seed(spark.createDataFrame(seeds_pd, schemas.SEEDS))
     # drive rounds manually inside an artificial window so speculation
     # can launch exactly as crawl() would allow

@@ -45,21 +45,6 @@ def test_bloom_low_false_positive_rate(spark, tmp_path):
     assert fp < 0.01  # 14 bits/key, 7 hashes → ~0.1% design point
 
 
-def test_filter_unseen_matches_set_oracle(spark):
-    cand = spark.createDataFrame(
-        [(i, f"u{i}") for i in range(200)], "url_hash long, url_canon string"
-    )
-    seen = spark.createDataFrame(
-        [(i, f"u{i}", 0) for i in range(0, 200, 3)],
-        "url_hash long, url_canon string, first_round int",
-    )
-    expected = {i for i in range(200) if i % 3 != 0}
-
-    # exact path (the bloom path: test_snapshot_bloom_matches_set_oracle)
-    got = {r["url_hash"] for r in filter_unseen(cand, seen).collect()}
-    assert got == expected
-
-
 def test_snapshot_bloom_matches_set_oracle(spark, tmp_path):
     """Cluster-safe bloom (SnapshotTable rows + cogroup applyInPandas):
     identical membership semantics to the exact path, including
@@ -138,7 +123,7 @@ def test_engine_compacts_bloom_on_cadence(spark, tmp_path):
     seeds_pd, pages_pd = synth.corpus(n_browse=3, n_users=5, n_other=2)
     pages = spark.createDataFrame(pages_pd, schemas.PAGES)
     seeds = spark.createDataFrame(seeds_pd, schemas.SEEDS)
-    eng = CrawlEngine(spark, tmp_path / "eng", pages, use_bloom=True,
+    eng = CrawlEngine(spark, tmp_path / "eng", pages,
                       compact_every=2, bloom_shards=4)
     eng.seed(seeds)
     eng.crawl(2)
